@@ -26,7 +26,7 @@ sys.dont_write_bytecode = True  # leave no __pycache__ in the checkout
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 import build  # noqa: E402
 
-WORKLOADS = ("curate_batch", "reco_sar", "serve_score")
+WORKLOADS = ("curate_batch", "reco_sar")
 JVM_TIMEOUT_S = 170
 ADD_OPENS = [
     "java.base/java.lang", "java.base/java.lang.invoke",
@@ -51,14 +51,12 @@ def class_archive(classpath: str, cpus: int) -> list:
     """JVM options that load classes from a class-data-sharing archive of
     this class path. Loading Spark's classes from 287 jars costs a fresh
     JVM several seconds, paid again by every run; the archive is dumped
-    once per build by a one-second traced run of every workload, so it
-    holds the classes all workloads load. Without an archive (the dump
-    failed), runs load classes from the jars as usual."""
+    once per build by a one-second traced run of every workload without
+    warm-ups, so it holds the classes all workloads load. Every run uses
+    it: when the dump fails, the run fails, so that no result is measured
+    another way."""
     key = hashlib.sha256(classpath.encode()).hexdigest()[:16]
     jsa = build.OUT / f"cds-{key}.jsa"
-    failed = jsa.with_suffix(".failed")
-    if failed.exists():
-        return []
     if not jsa.exists():
         for old in build.OUT.glob("cds-*"):
             if old.is_file():
@@ -67,24 +65,26 @@ def class_archive(classpath: str, cpus: int) -> list:
         shutil.rmtree(work, ignore_errors=True)
         (work / "tmp").mkdir(parents=True)
         tmp = jsa.with_name(jsa.name + f".tmp{os.getpid()}")
+        log = build.OUT / f"cds-dump-{os.getpid()}.log"
         cmd = jvm_command(classpath, work, "perfbench.Main",
-                          ["curate_batch", "1", "1", "1", str(work), str(cpus)],
+                          ["curate_batch", "1", "1", "classes", str(work),
+                           str(cpus)],
                           (f"-XX:ArchiveClassesAtExit={tmp}", "-Xlog:cds=off",
                            "-Xlog:cds+dynamic=off"))
         try:
-            subprocess.run(cmd, stdout=subprocess.DEVNULL,
-                           stderr=subprocess.DEVNULL, cwd=work, timeout=600)
+            with open(log, "w") as err:
+                subprocess.run(cmd, stdout=subprocess.DEVNULL, stderr=err,
+                               cwd=work, timeout=600)
         except subprocess.TimeoutExpired:
             pass
         shutil.rmtree(work, ignore_errors=True)
-        if tmp.exists():
-            tmp.rename(jsa)
-        else:
-            # dump once per build: a retry on every run would not fit in
-            # a run's time
-            failed.write_text("dump failed\n")
-            print("perfbench: no class-data-sharing archive", file=sys.stderr)
-            return []
+        if not tmp.exists():
+            tail = log.read_text(errors="replace").splitlines()[-20:]
+            log.unlink()
+            sys.stderr.write("\n".join(tail) + "\n")
+            raise SystemExit("class-data-sharing archive dump failed")
+        log.unlink()
+        tmp.rename(jsa)
     return [f"-XX:SharedArchiveFile={jsa}"]
 
 

@@ -40,8 +40,10 @@ final class Curate extends Workload {
     WarcFiles.write(responses, warcDir, maxShardBytes = 1L << 20)
   }
 
-  def warmUp(): Unit =
-    job(warcDir, new java.io.File(c.dir, "warm-out").toString, None)
+  /** Two jobs: after one, the first timed job still ran 15-25% slower
+    * than the next while the JIT finished compiling. */
+  def warmUp(): Unit = for (k <- 0 until 2)
+    job(warcDir, new java.io.File(c.dir, s"warm-out-$k").toString, None)
 
   /** The user's job. */
   private def job(in: String, out: String, tr: Option[Tracer]): Unit = {
@@ -131,12 +133,33 @@ final class Curate extends Workload {
       "planted_drop_rate" -> f"${crawl.dropped / n}%.4f")
   }
 
+  /** (candidate pairs, verified pairs) of each traced operation: the rows
+    * into and out of the Jaccard predicate in the plans of its
+    * `dedup.near` span. */
+  private def nearPairs(tr: Tracer): Seq[(Long, Long)] =
+    tr.spans.filter(_.name == "dedup.near").toSeq.map { s =>
+      val io = tr.work.get(s.id).toSeq.flatMap(_.plans)
+        .map(Plans.predicateIO(_, "sortedlongjaccard"))
+      (io.map(_._1).sum, io.map(_._2).sum)
+    }
+
+  /** Every planted near copy joins its source through a verified pair, so
+    * each traced operation must count at least that many verified pairs,
+    * and no more than its candidates. */
+  override def checkTrace(tr: Tracer): Int = {
+    val pairs = nearPairs(tr)
+    val bad = pairs.count { case (cand, ver) =>
+      ver < crawl.nearCopies || ver > cand }
+    if (pairs.isEmpty || bad > 0) System.err.println(s"$name: near-dup " +
+      s"(candidate, verified) pairs per operation ${pairs.mkString(",")}, " +
+      s"${crawl.nearCopies} near copies planted")
+    if (pairs.isEmpty) 1 else bad
+  }
+
   def layers(tr: Tracer, m: Measured, gcS: Double): Seq[Metric] = {
-    val plans = tr.spans.filter(_.name == "dedup.near")
-      .flatMap(s => tr.work.get(s.id).toSeq.flatMap(_.plans))
-    val io = plans.map(Plans.predicateIO(_, "sortedlongjaccard"))
-    val cand = io.map(_._1).sum.toDouble / math.max(1, m.latMs.size)
-    val ver = io.map(_._2).sum.toDouble / math.max(1, m.latMs.size)
+    val pairs = nearPairs(tr)
+    val cand = Stats.median(pairs.map(_._1.toDouble))
+    val ver = Stats.median(pairs.map(_._2.toDouble))
     Workload.jobSpans(tr, name, spans) ++ Seq(
       Metric(s"$name.dedup.near.candidate_pairs", cand, "count"),
       Metric(s"$name.dedup.near.verified_pairs", ver, "count"),

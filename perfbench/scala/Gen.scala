@@ -7,9 +7,9 @@ import scala.collection.mutable.ArrayBuffer
   * gives byte-identical inputs, and each generator also returns the
   * planted structure its workload's checker compares against.
   *
-  * The shapes follow the sf0.1 fixture (FIXTURES.md): `documents` are
-  * single-line texts of 8–100 words over a small vocabulary, and the
-  * recommender log is `orders ⋈ lineitem` with user = `o_custkey`,
+  * The shapes follow the sf0.1 fixture (FIXTURES.md): crawled pages are
+  * built from sentences over a small vocabulary, and the recommender
+  * log is `orders ⋈ lineitem` with user = `o_custkey`,
   * item = `l_partkey`, time = `o_orderdate`. The rows themselves are
   * synthesized from the seed, because a run may read nothing outside its
   * checkout.
@@ -152,12 +152,6 @@ object Gen {
     Crawl(pages.toIndexedSeq, sources, exact, near, dropped, cluster.result())
   }
 
-  /** sf0.1-shaped documents: one line of 8–100 lowercase words. */
-  def documents(seed: Long, n: Int): IndexedSeq[String] = {
-    val r = rng(seed, 2)
-    IndexedSeq.fill(n)(words(r, 8 + r.nextInt(93)).mkString(" "))
-  }
-
   // ---- reco_sar ---------------------------------------------------------
 
   /** One order line: user = o_custkey, item = l_partkey, day = o_orderdate
@@ -205,17 +199,5 @@ object Gen {
     }
     Log(train.toIndexedSeq, test.toIndexedSeq, users, perCat * Categories,
       ZipfS)
-  }
-
-  // ---- serve_score ------------------------------------------------------
-
-  /** Request bodies: sf0.1-shaped documents of mixed length. */
-  def requestBodies(seed: Long, n: Int): IndexedSeq[String] =
-    documents(seed, n)
-
-  /** Dense-layer weights of the scoring head, uniform in [-1, 1). */
-  def weights(seed: Long, rows: Int, cols: Int, layer: Int): Array[Array[Double]] = {
-    val r = rng(seed, 10L + layer)
-    Array.fill(rows, cols)(r.nextDouble() * 2 - 1)
   }
 }

@@ -3,7 +3,7 @@ package perfbench
 import org.apache.spark.sql.SparkSession
 import java.io.File
 
-/** `Main <workload> <seed> <seconds> <trace 0|1> <workDir> <cpus>`.
+/** `Main <workload> <seed> <seconds> <trace 0|1|classes> <workDir> <cpus>`.
   *
   * Untraced: set the workload up [[SetupRuns]] times, each on a fresh
   * session (the last one stays), warm it up untimed,
@@ -11,12 +11,15 @@ import java.io.File
   * metrics. Traced: set up and warm up every workload, run it for a third
   * of `seconds` untraced and then traced, and print the per-layer metrics
   * of all of them, so that each traced run reports the full per-layer
-  * set. The result object is the last stdout line. */
+  * set. `classes` is a traced run without warm-ups, which loads every
+  * class a run loads; it exists for the class-data-sharing dump. The
+  * result object is the last stdout line. */
 object Main {
   val SetupRuns = 3
 
   def session(work: File, cpus: Int): SparkSession =
     graft.core.SessionDefaults(SparkSession.builder()
+      .withExtensions(Tracer.extensions)
       .master(s"local[$cpus]").appName("perfbench")
       .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.ui.enabled", "false")
@@ -30,8 +33,8 @@ object Main {
       val Array(wl, seed, seconds, trace, work, cpus) = args
       Workload.named(wl) // reject an unknown name before any work
       val out =
-        if (trace == "1") traced(wl, seed.toLong, seconds.toDouble,
-          new File(work), cpus.toInt)
+        if (trace != "0") traced(wl, seed.toLong, seconds.toDouble,
+          new File(work), cpus.toInt, warm = trace == "1")
         else untraced(wl, seed.toLong, seconds.toDouble, new File(work),
           cpus.toInt)
       println(out)
@@ -50,7 +53,7 @@ object Main {
     val w = Workload.named(wl)
     var spark: SparkSession = null
     val setups = (0 until SetupRuns).map { k =>
-      if (spark != null) { w.close(); spark.stop() }
+      if (spark != null) spark.stop()
       val t0 = System.nanoTime()
       spark = session(work, cpus)
       spark.sparkContext.setLogLevel("ERROR")
@@ -59,7 +62,9 @@ object Main {
       System.err.println(f"perfbench: set-up $k took $s%.3f s")
       s
     }
+    val w0 = System.nanoTime()
     w.warmUp()
+    val warmS = (System.nanoTime() - w0) / 1e9
     val host0 = Host.cpu()
     val m = w.measure(seconds, None)
     System.err.println(f"perfbench: ${m.ops} operations in ${m.wallS}%.3f s")
@@ -73,13 +78,12 @@ object Main {
       s""""op_ms":[${m.latMs.map(fmt).mkString(",")}],""" +
       s""""op_tail":${tail.getOrElse("null")},""" +
       s""""setup_runs_s":[${setups.map(fmt).mkString(",")}],""" +
+      s""""warmup_s":${fmt(warmS)},""" +
       s""""env":${obj(env.map(x => x.name -> fmt(x.value)))}}""")
-    w.close()
     spark.stop()
     // throughput is not a metric of its own: operations run one at a time,
-    // or from a fixed closed loop, so items per second is items per
-    // operation over mean latency (Little's law) and would only add a
-    // second noisy comparison of the same quantity
+    // so items per second is items per operation over mean latency and
+    // would only add a second noisy comparison of the same quantity
     result(m.ops, m.failed + wrong, Seq(
       Metric("setup_s", Stats.median(setups), "s"),
       Metric("op_p50_ms", Stats.median(m.latMs), "ms"),
@@ -87,7 +91,7 @@ object Main {
   }
 
   private def traced(wl: String, seed: Long, seconds: Double, work: File,
-      cpus: Int): String = {
+      cpus: Int, warm: Boolean): String = {
     val spark = session(work, cpus)
     spark.sparkContext.setLogLevel("ERROR")
     val pass = math.max(1.0, seconds / 3)
@@ -98,7 +102,7 @@ object Main {
     val host0 = Host.cpu()
     val metrics = Workload.all.map(_()).flatMap { w =>
       w.setup(Ctx(spark, seed, new File(work, w.name), cpus))
-      w.warmUp()
+      if (warm) w.warmUp()
       val plain = w.measure(pass, None)
       val tr = new Tracer(spark, s"${w.name}-$seed")
       tr.start()
@@ -106,8 +110,7 @@ object Main {
       val gcS = tr.stop()
       tr.write(spanFile.toPath)
       attempted += plain.ops + m.ops
-      failed += plain.failed + m.failed + w.check()
-      w.close()
+      failed += plain.failed + m.failed + w.check() + w.checkTrace(tr)
       w.layers(tr, m, gcS) :+ Metric(s"${w.name}.tracing_overhead_pct",
         (Stats.median(m.latMs) / Stats.median(plain.latMs) - 1) * 100, "%")
     }

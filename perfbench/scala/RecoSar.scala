@@ -7,12 +7,14 @@ import scala.collection.mutable.ArrayBuffer
 
 /** SAR on implicit order-line feedback: fit on the training orders, then
   * recommend top-k for every user and score the list against the held-out
-  * orders. One operation is fit + recommend + evaluate. */
+  * orders. One operation is fit + recommend + evaluate. Customers, parts
+  * and orders are sf0.1's (15,000, 20,000 and 150,000, at four lines per
+  * order) each divided by the same factor, 500/7. */
 final class RecoSar extends Workload {
   val name = "reco_sar"
-  val Users = 1000
-  val Items = 200
-  val Orders = 2500
+  val Users = 210
+  val Items = 280
+  val Orders = 2100
   val K = 10
   val spans = Seq("reco.fit", "reco.recommend", "reco.evaluate",
     "reco.affinity", "reco.similarity")

@@ -1,9 +1,10 @@
 package perfbench
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.{FilterExec, QueryExecution, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.{DataFrame, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.{ColumnarRule, FilterExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper}
 import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.util.QueryExecutionListener
 import scala.collection.concurrent.TrieMap
@@ -73,9 +74,11 @@ object Plans extends AdaptiveSparkPlanHelper {
 
 /** Span recorder with Spark attribution. Jobs, stages and tasks are keyed
   * to a span by the `perfbench.span` local property set around each
-  * call; query planning phases and executed plans arrive through a
-  * [[QueryExecutionListener]] while the span is open (the listener bus is
-  * drained before a span closes). Spans stay in memory until [[write]]. */
+  * call; query planning phases arrive through a [[QueryExecutionListener]]
+  * while the span is open (the listener bus is drained before a span
+  * closes). Adaptive query plans are kept through [[Tracer.extensions]],
+  * which also sees queries run as RDDs (`Dataset.rdd`), where no query
+  * listener is called. Spans stay in memory until [[write]]. */
 final class Tracer(spark: SparkSession, val run: String) {
   import Tracer.Prop
   private val sc = spark.sparkContext
@@ -124,21 +127,31 @@ final class Tracer(spark: SparkSession, val run: String) {
         val ms = Seq("analysis", "optimization", "planning")
           .flatMap(qe.tracker.phases.get).map(_.durationMs).sum
         val w = workOf(id)
-        w.synchronized { w.planningMs += ms; w.plans += qe.executedPlan }
+        w.synchronized(w.planningMs += ms)
       }
     }
     override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
   }
 
+  /** Keep an adaptive plan, planned on a thread inside a span, with
+    * that span; its final stages are read after they ran. */
+  private def keepPlan(p: SparkPlan): Unit =
+    Option(sc.getLocalProperty(Prop)).foreach { s =>
+      val w = workOf(s.toInt)
+      w.synchronized(if (!w.plans.exists(_ eq p)) w.plans += p)
+    }
+
   def start(): Unit = {
     sc.addSparkListener(listener)
     spark.listenerManager.register(qeListener)
+    Tracer.active = Some(this)
     gcAtStart = Tracer.gcMillis()
   }
 
   /** Detach from Spark; returns the JVM's GC seconds while attached. */
   def stop(): Double = {
     drain()
+    Tracer.active = None
     sc.removeSparkListener(listener)
     spark.listenerManager.unregister(qeListener)
     (Tracer.gcMillis() - gcAtStart) / 1000.0
@@ -215,6 +228,25 @@ final class Tracer(spark: SparkSession, val run: String) {
 
 object Tracer {
   val Prop = "perfbench.span"
+
+  @volatile private var active: Option[Tracer] = None
+
+  /** Session extension that hands every adaptive plan root to the open
+    * tracer. The columnar rules run on the root right after the adaptive
+    * wrapper is inserted, for `Dataset.rdd` as for actions, and the root
+    * is the instance that runs; without an open tracer it does nothing. */
+  def extensions(e: SparkSessionExtensions): Unit =
+    e.injectColumnar(_ => new ColumnarRule {
+      override val preColumnarTransitions: Rule[SparkPlan] = new Rule[SparkPlan] {
+        def apply(p: SparkPlan): SparkPlan = {
+          p match {
+            case a: AdaptiveSparkPlanExec => active.foreach(_.keepPlan(a))
+            case _ =>
+          }
+          p
+        }
+      }
+    })
 
   def gcMillis(): Long = {
     import scala.jdk.CollectionConverters._

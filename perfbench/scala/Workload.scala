@@ -29,17 +29,18 @@ trait Workload {
   /** Check every output recorded since set-up, off the clock; returns
     * the number of operations whose output was wrong. */
   def check(): Int
+  /** Check what a traced [[measure]] recorded against the planted
+    * structure; returns the number of operations that fail it. */
+  def checkTrace(tr: Tracer): Int = 0
   /** Input sizes and planted rates, as JSON members. */
   def inputs: Seq[(String, String)]
   /** Per-layer metrics of a traced [[measure]]; `gcS` is its GC time. */
   def layers(tr: Tracer, m: Measured, gcS: Double): Seq[Metric]
-  /** Stop what set-up started (streams, servers). */
-  def close(): Unit = ()
 }
 
 object Workload {
   val all: Seq[() => Workload] =
-    Seq(() => new Curate, () => new RecoSar, () => new ServeScore)
+    Seq(() => new Curate, () => new RecoSar)
 
   def named(n: String): Workload =
     all.map(_()).find(_.name == n)
