@@ -148,6 +148,11 @@ object GraphFunctions {
   * answers "which docs are the same doc" — the form needed for canonical-
   * doc selection, cluster-size weighting, or dup-rate auditing in a
   * training-data pipeline.
+  * Eager: `transform` runs the clustering jobs, and materializes its
+  * input once ([[graft.core.Barrier]]; a bare scan is read as is) for
+  * them and the label join. Those blocks, payload included, are not
+  * recomputable: losing an executor that holds them fails the job, which
+  * is re-run to recover.
   */
 class DuplicateClusterer(override val uid: String) extends Transformer
     with HasInputCol with HasOutputCol with graft.core.GraftWritable {
@@ -185,12 +190,12 @@ class DuplicateClusterer(override val uid: String) extends Transformer
 
   override def transform(ds: Dataset[_]): DataFrame = {
     import DedupFunctions._
-    val df = ds.toDF()
     // withColumn would silently overwrite a pre-existing column of this
     // name (SequencePacker guards the analogous case); fail fast instead
-    require(!df.columns.contains(getOutputCol),
+    require(!ds.columns.contains(getOutputCol),
       s"input already has a column named '$getOutputCol'; set outputCol " +
         "to an unused name")
+    val df = Barrier.materialize(ds.toDF())
     val id = col($(idCol))
     val r = $(numHashes) / $(bands)
     val buckets = df

@@ -1,5 +1,6 @@
 package graft.dedup
 
+import graft.core.Barrier
 import org.apache.spark.ml.Transformer
 import org.apache.spark.ml.param._
 import org.apache.spark.sql.{DataFrame, Dataset}
@@ -75,10 +76,9 @@ abstract class FingerprintDeduplicatorBase extends Transformer
       if ($(spreadDecode) && narrow.rdd.getNumPartitions < slots)
         narrow.repartition(slots)
       else narrow
-    val fps = spread
+    val fps = Barrier.materialize(spread
       .select(col("__id"), fpUdf(col("__bytes")).as("__fp"))
-      .filter(col("__fp").isNotNull)
-      .localCheckpoint()
+      .filter(col("__fp").isNotNull))
     val dupIds = hammingDupIds(fps, col("__id"), "__fp", $(maxHamming),
       $(blocks), $(maxBucketSize), s"${uid}_dropped")
     df.join(dupIds, id.cast("long") === col("__dup_id"), "left_anti")

@@ -132,15 +132,8 @@ class IncrementalMinHashDeduplicator(override val uid: String)
     // (plans/r19/; the formatted output's details section repeats every
     // operator name, so naive substring counts doubled these figures —
     // PlanStats now counts the tree section only).
-    // localCheckpoint trades fault tolerance for the plan truncation: the
-    // checkpointed blocks are NOT recomputable, so an executor loss (e.g.
-    // dynamic deallocation at cluster scale) fails the batch job instead
-    // of recomputing — acceptable for a snapshot delta, which simply
-    // re-runs; a deployment that cannot re-run a batch should persist the
-    // frame to reliable storage instead.
-    val cands = batchKeys.join(cKeyed, Seq("__key"))
-      .select(col("__id"), col("__cid")).distinct()
-      .localCheckpoint()
+    val cands = Barrier.materialize(batchKeys.join(cKeyed, Seq("__key"))
+      .select(col("__id"), col("__cid")).distinct())
     // verification payloads are computed ONLY for candidate rows: the
     // batch/corpus text is semi-joined down to candidate ids BEFORE the
     // shingle/signature projection, so the expensive hashing runs per
@@ -156,8 +149,10 @@ class IncrementalMinHashDeduplicator(override val uid: String)
     // broadcast cap and fail where a shuffle join finishes). dropIds ⊆
     // the batch side of cands, so one measurement guards every hint.
     val candCount = cands.count()
-    def maybeBroadcast(f: DataFrame): DataFrame =
-      if (candCount <= $(broadcastMaxCandidates)) broadcast(f) else f
+    def maybeBroadcast(f: DataFrame): DataFrame = {
+      val cap = $(broadcastMaxCandidates)
+      if (cap > 0 && candCount <= cap) broadcast(f) else f
+    }
     val dropIds = $(verifyMode) match {
       case "signature" =>
         val bSig = df.select(id.cast("long").as("__id"),
@@ -200,10 +195,9 @@ class IncrementalMinHashDeduplicator(override val uid: String)
     // anti-join); without the barrier each reference re-executes the
     // whole corpus-clear pipeline above. Survivors are O(batch) rows —
     // the delta a snapshot pipeline holds by definition.
-    val survivors = df.join(
+    val survivors = Barrier.materialize(df.join(
       maybeBroadcast(dropIds.select(col("__id").as("__drop_id"))),
-      id.cast("long") === col("__drop_id"), "left_anti")
-      .localCheckpoint()
+      id.cast("long") === col("__drop_id"), "left_anti"))
     // near-dedup WITHIN the corpus-cleared batch (exact-Jaccard verify —
     // the batch's own text is at hand)
     new MinHashDeduplicator().setInputCol(getInputCol).setIdCol($(idCol))

@@ -322,19 +322,13 @@ class IncrementalSemDeDupModel(override val uid: String)
       id.cast("long") === col("__drop_id"), "left_anti")
     if (!$(dedupWithinBatch)) survivors
     else {
-      // materialized survivor boundary (the IncrementalMinHashDeduplicator
-      // pattern): the within-batch SemDeDup references its input TWICE —
-      // its narrow (id, vector) checkpoint AND the final anti-join that
-      // returns the full surviving rows — and without the barrier the
-      // second reference replans and RE-EXECUTES the whole corpus-check
-      // pipeline above (cell aggregations + verify UDF; 115-op plan
-      // measured at sf0.1, plans/r20/semdedup_incremental_before.txt).
-      // Survivors are O(batch) rows — the snapshot delta a pipeline
-      // holds by definition. Trade: locally-checkpointed blocks are not
-      // recomputable, so an executor loss fails the batch job instead of
-      // recomputing — a snapshot batch simply re-runs; a deployment that
-      // cannot re-run should persist to reliable storage instead.
-      val surv = survivors.localCheckpoint()
+      // the within-batch SemDeDup references its input TWICE — its
+      // narrow (id, vector) checkpoint AND the final anti-join — and
+      // lazy, the second reference re-executes the whole corpus-check
+      // pipeline above (115-op plan at sf0.1,
+      // plans/r20/semdedup_incremental_before.txt). Survivors are
+      // O(batch) rows.
+      val surv = Barrier.materialize(survivors)
       val within = new SemDeDup().setInputCol(getInputCol)
         .setIdCol($(idCol)).setThreshold(thr).setKeepRule("minId")
         .setNClusters($(withinBatchClusters))

@@ -155,10 +155,9 @@ class SemDeDup(override val uid: String) extends Transformer
     // so an expensive upstream — an embedding UDF over raw text — runs
     // exactly once; ~(8 + dim*8) bytes/doc of executor storage,
     // released when the returned plan is garbage-collected
-    val narrow = df
+    val narrow = Barrier.materialize(df
       .select(id.cast("long").as("__id"),
-        col(getInputCol).cast(ArrayType(DoubleType)).as("__v"))
-      .localCheckpoint(true)
+        col(getInputCol).cast(ArrayType(DoubleType)).as("__v")))
     // auto k: cluster count grows with the corpus (fixed target cluster
     // SIZE — the paper's protocol), capped where driver-side training
     // stops being the right tool; the FAISS ~64 samples/cell guideline

@@ -92,17 +92,10 @@ class SAR(override val uid: String) extends Estimator[SARModel]
 
   /** Item–item similarity from co-occurrence of distinct (user,item) pairs. */
   def calculateItemItemSimilarity(df: DataFrame): DataFrame = {
-    // materialized with a lineage barrier, not a lazy persist: the
-    // needCap count, occ and BOTH sides of the co-occurrence join read
-    // this frame — persisted it was still replanned (and the needCap
-    // decision re-ran the distinct over the raw log); checkpointed,
-    // every reference is a leaf scan of the narrow (user, item) blocks.
-    // Residency is the distinct pair set, same as the former persist
-    // (ContextCleaner reclaims the blocks on GC). Non-recomputable on
-    // executor loss — re-fit to recover; model.write persists durably.
-    val pairs = df.select(col(getUserCol).as("user"), col(getItemCol).as("item"))
-      .distinct()
-      .localCheckpoint()
+    // read by the needCap count, occ and both co-occurrence join sides
+    val pairs = Barrier.materialize(
+      df.select(col(getUserCol).as("user"), col(getItemCol).as("item"))
+        .distinct())
     // skew guard: cap per-user item set (deterministic by item order) —
     // skipped entirely when the catalog can't exceed the cap (saves the
     // window's extra shuffle+sort; one tiny count job decides, reading
@@ -110,9 +103,8 @@ class SAR(override val uid: String) extends Estimator[SARModel]
     val needCap = pairs.select("item").distinct().count() > $(maxUserItems)
     val w = Window.partitionBy("user").orderBy("item")
     val capped = if (needCap)
-      pairs.withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") <= $(maxUserItems)).drop("__rn")
-        .localCheckpoint()
+      Barrier.materialize(pairs.withColumn("__rn", row_number().over(w))
+        .filter(col("__rn") <= $(maxUserItems)).drop("__rn"))
     else pairs
     val occ = capped.groupBy("item").agg(count("*").as("occ"))
     val co = capped.as("a")
@@ -134,20 +126,10 @@ class SAR(override val uid: String) extends Estimator[SARModel]
   override def fit(ds: Dataset[_]): SARModel = {
     val df = ds.toDF()
     val m = new SARModel(uid + "_model")
-    // both frames are read multiple times by scoring (affinity join +
-    // seen-filter, and the similarity count+broadcast) — materialize
-    // them with a lineage BARRIER, not a lazy persist: persisted frames
-    // keep their full upstream plan, and every scoring reference
-    // replanned the whole fit pipeline into its own tree (measured r20
-    // at sf0.1: ranking_metrics 239-op / 18-scan plan, sar_recommend
-    // 220 / 17 — plans/r20/). After the checkpoint each reference is a
-    // leaf scan of the materialized blocks. Residency is the same
-    // O(users·items + items²-capped) the persist already held. Trade:
-    // checkpointed blocks are not recomputable — an executor loss fails
-    // the fit/scoring job instead of recomputing (re-fit to recover);
-    // model.write persists both frames durably for deployments.
-    m.affinities = calculateUserItemAffinities(df).localCheckpoint()
-    m.itemSimilarity = calculateItemItemSimilarity(df).localCheckpoint()
+    // scoring reads both frames several times; lazy, every reference
+    // replanned the whole fit (sf0.1 ranking_metrics: 239 ops → 36)
+    m.affinities = Barrier.materialize(calculateUserItemAffinities(df))
+    m.itemSimilarity = Barrier.materialize(calculateItemItemSimilarity(df))
     copyValues(m)
     m.set(m.userCol, getUserCol).set(m.itemCol, getItemCol)
     m

@@ -33,6 +33,11 @@ import org.apache.spark.sql.types._
   * integer arithmetic — window membership is `floor(offset /
   * contextLen)` — which is what makes the operator hash-gate replayable
   * in SQL (cumulative sum + integer division).
+  * Eager: `transform` runs the sort and offset jobs, and materializes its
+  * input once ([[graft.core.Barrier]]; a bare scan is read as is) for
+  * them and the payload join. Those blocks, payload included, are not
+  * recomputable: losing an executor that holds them fails the job, which
+  * is re-run to recover.
   */
 class ConcatChunker(override val uid: String) extends Transformer
     with HasInputCol with graft.core.GraftWritable {
@@ -60,9 +65,9 @@ class ConcatChunker(override val uid: String) extends Transformer
   def setLengthCol(v: String): this.type = set(lengthCol, v)
 
   override def transform(ds: Dataset[_]): DataFrame = {
-    val df = ds.toDF()
     for (c <- Seq("tok_offset", "chunk_id", "tok_start", "tok_end", "__n"))
-      require(!df.columns.contains(c), s"input already has a column named '$c'")
+      require(!ds.columns.contains(c), s"input already has a column named '$c'")
+    val df = Barrier.materialize(ds.toDF())
     // narrow ordering pass: (id, tokenCount) only — 16-byte rows through
     // the global range sort, never the document payload
     val lenExpr =

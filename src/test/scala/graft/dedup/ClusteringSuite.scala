@@ -152,6 +152,30 @@ class ClusteringSuite extends TestBase {
     assert(e.getMessage.contains("cluster_size"))
   }
 
+  test("the curation chain runs its input's upstream once") {
+    // DuplicateClusterer and ConcatChunker run eager side jobs over their
+    // input and then read it again; each materializes its input once, so
+    // a projection under the chain is evaluated once per row in total
+    val evals = sc.longAccumulator("upstream evaluations")
+    val touch = udf { (t: String) => evals.add(1L); t }
+    // an RDD source: over a local relation the optimizer could evaluate
+    // the projection itself, at planning time
+    val input = sc.parallelize(docs.as[(Long, String)].collect().toSeq, 2)
+      .toDF("doc_id", "text")
+      .select(col("doc_id"), touch(col("text")).as("text"))
+    val clustered = new DuplicateClusterer().setInputCol("text")
+      .setIdCol("doc_id").setShingleSize(2).setNumHashes(64).setBands(16)
+      .setThreshold(0.6).transform(input)
+    val canon = new CanonicalSelector().setScoreCol("len")
+      .transform(clustered.withColumn("len", length(col("text"))))
+    val chunks = new graft.text.ConcatChunker().setInputCol("text")
+      .setIdCol("doc_id").setContextLen(4).transform(canon).collect()
+    // doc 4 is the longest member of cluster 0
+    assert(chunks.map(_.getAs[Long]("doc_id")).toSet == Set(3L, 4L))
+    assert(evals.value == 5L, s"upstream rows evaluated ${evals.value} " +
+      "times for 5 input rows")
+  }
+
   test("DuplicateClusterer is partitioning-independent") {
     val a = new DuplicateClusterer().setInputCol("text").setIdCol("doc_id")
       .setShingleSize(2).setNumHashes(64).setBands(16).setThreshold(0.6)

@@ -1,6 +1,8 @@
 package graft.dedup
 
 import graft.TestBase
+import org.apache.spark.sql.catalyst.plans.LeftAnti
+import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, Join, LogicalPlan}
 import org.apache.spark.sql.functions._
 
 class IncrementalMinHashSuite extends TestBase {
@@ -59,6 +61,35 @@ class IncrementalMinHashSuite extends TestBase {
       Seq(20L, 21L))
   }
 
+  /** `body`'s result and the optimized logical plans of the queries it
+    * runs. */
+  private def withPlans[T](body: => T): (T, Seq[LogicalPlan]) = {
+    val plans = scala.collection.mutable.ArrayBuffer.empty[LogicalPlan]
+    val l = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          durationNs: Long): Unit =
+        plans.synchronized { plans += qe.optimizedPlan }
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(l)
+    val out = try {
+      val t = body
+      org.apache.spark.graftshims.ListenerBridge
+        .waitUntilEmpty(spark.sparkContext, 5000)
+      t
+    } finally spark.listenerManager.unregister(l)
+    (out, plans.synchronized(plans.toSeq))
+  }
+
+  private def joins(plans: Seq[LogicalPlan]): Seq[Join] =
+    plans.flatMap(_.collect { case j: Join => j })
+
+  private def broadcastHinted(j: Join): Boolean =
+    (j.hint.leftHint ++ j.hint.rightHint).exists(_.strategy.contains(BROADCAST))
+
   test("over-threshold candidate count falls back to shuffle joins") {
     // the broadcast hints on the candidate/drop id frames are gated on
     // the MEASURED candidate count (the frames carry no stats): above
@@ -67,39 +98,35 @@ class IncrementalMinHashSuite extends TestBase {
     // otherwise push a forced broadcast past Spark's 8 GB cap; AQE
     // re-broadcasting a frame it MEASURED as tiny at runtime stays
     // legitimate and is why the assertion reads the optimized plan's
-    // hints, not the executed strategy) and the result must be
+    // join hints, not the executed strategy) and the result must be
     // unchanged.
-    val plans = scala.collection.mutable.ArrayBuffer.empty[String]
-    val l = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          durationNs: Long): Unit =
-        plans.synchronized { plans += qe.optimizedPlan.toString }
-      override def onFailure(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          exception: Exception): Unit = ()
-    }
-    spark.listenerManager.register(l)
-    try {
-      def antiJoinPlans(): Seq[String] = {
-        org.apache.spark.graftshims.ListenerBridge
-          .waitUntilEmpty(spark.sparkContext, 5000)
-        val p = plans.synchronized { val s = plans.toSeq; plans.clear(); s }
-        p.filter(_.contains("LeftAnti"))
-      }
-      val small = op("exact").setCorpus(corpus)
-        .setBroadcastMaxCandidates(0L).transform(batch)
-      val overPlans = antiJoinPlans()
-      assert(overPlans.nonEmpty, "expected the survivor anti-join to run")
-      assert(!overPlans.exists(_.contains("strategy=broadcast")),
-        "over-threshold path must not hint a broadcast")
-      val default = op("exact").setCorpus(corpus).transform(batch)
-      val underPlans = antiJoinPlans()
-      assert(underPlans.exists(_.contains("strategy=broadcast")),
-        "under-threshold path should keep the broadcast hint")
-      assert(ids(small) == Seq(11L, 13L) && ids(default) == Seq(11L, 13L),
-        "fallback must not change decisions")
-    } finally spark.listenerManager.unregister(l)
+    def antiJoinPlans(plans: Seq[LogicalPlan]): Seq[LogicalPlan] =
+      plans.filter(p => joins(Seq(p)).exists(_.joinType == LeftAnti))
+    val (small, over) = withPlans(op("exact").setCorpus(corpus)
+      .setBroadcastMaxCandidates(0L).transform(batch))
+    val overPlans = antiJoinPlans(over)
+    assert(overPlans.nonEmpty, "expected the survivor anti-join to run")
+    assert(!joins(overPlans).exists(broadcastHinted),
+      "over-threshold path must not hint a broadcast")
+    val (default, under) =
+      withPlans(op("exact").setCorpus(corpus).transform(batch))
+    assert(joins(antiJoinPlans(under)).exists(broadcastHinted),
+      "under-threshold path should keep the broadcast hint")
+    assert(ids(small) == Seq(11L, 13L) && ids(default) == Seq(11L, 13L),
+      "fallback must not change decisions")
+  }
+
+  test("broadcastMaxCandidates = 0 disables the hints for an empty candidate set") {
+    val clean = Seq(
+      (20L, "some words that exist nowhere else in any corpus fixture"),
+      (21L, "yet another disjoint sentence carrying no shared shingles"))
+      .toDF("doc_id", "text")
+    val (got, plans) = withPlans(ids(op("exact").setCorpus(corpus)
+      .setBroadcastMaxCandidates(0L).transform(clean)))
+    assert(got == Seq(20L, 21L))
+    assert(joins(plans).nonEmpty, "expected the verify joins to run")
+    assert(!joins(plans).exists(broadcastHinted),
+      "broadcastMaxCandidates = 0 must hint no broadcast")
   }
 
   test("matches a from-scratch MinHashDeduplicator over the union") {
